@@ -78,9 +78,12 @@ def _sf_table(spark, name: str, partitions: int = 8):
     matter the core count (measured: the md5-shingle pass over
     documents ran 7 s single-threaded).  A deployment's tables arrive as
     many files/row-groups; this restores that shape so the bench measures
-    the operators, not the fixture's file layout."""
+    the operators, not the fixture's file layout.  The cache path carries
+    the source file's size and mtime, so a replaced fixture under the same
+    sf directory name is re-laid instead of silently served stale."""
     tag = os.path.basename(SF_DIR.rstrip("/"))
-    path = f"{WORK}/table_{name}_{tag}_p{partitions}"
+    src = os.stat(f"{SF_DIR}/{name}.parquet")
+    path = f"{WORK}/table_{name}_{tag}_{src.st_size}_{src.st_mtime_ns}_p{partitions}"
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         (
             spark.read.parquet(f"{SF_DIR}/{name}.parquet")

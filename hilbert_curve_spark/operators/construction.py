@@ -26,13 +26,11 @@ experiments reach the same conclusion.
 
 from __future__ import annotations
 
-import functools
-import operator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, EngineConfig
+from .range_query import intervals_predicate
 
 
 def dyadic_cover(lo: int, hi: int, order: int) -> list[tuple[int, int]]:
@@ -51,11 +49,6 @@ def dyadic_cover(lo: int, hi: int, order: int) -> list[tuple[int, int]]:
     return out
 
 
-def _axis_predicate(col: str, cover: list[tuple[int, int]]) -> F.Column:
-    terms = [F.col(col).between(lo, hi) for lo, hi in cover]
-    return functools.reduce(operator.or_, terms)
-
-
 def construction_grq(
     doc_geo: DataFrame,
     x_lo: int, x_hi: int, y_lo: int, y_hi: int,
@@ -66,8 +59,8 @@ def construction_grq(
     the reference's bitmap-AND (``ConstructionOne.java:478-543``)."""
     xc = dyadic_cover(x_lo, x_hi, config.order)
     yc = dyadic_cover(y_lo, y_hi, config.order)
-    xs = doc_geo.filter(_axis_predicate("x", xc))
-    ys = doc_geo.filter(_axis_predicate("y", yc)).select("doc_id")
+    xs = doc_geo.filter(intervals_predicate("x", xc))
+    ys = doc_geo.filter(intervals_predicate("y", yc)).select("doc_id")
     return xs.join(ys, "doc_id", "semi").select("doc_id", "x", "y")
 
 

@@ -41,15 +41,16 @@ def _edges(verts: list[tuple[int, int]]) -> list[tuple[int, int, int, int]]:
     return [(*verts[i], *verts[(i + 1) % n]) for i in range(n)]
 
 
-def inside_polygon_expr(verts: list[tuple[int, int]], x: str = "x", y: str = "y") -> F.Column:
-    """Codegen even-odd ray cast: fold the literal edge array with a boolean
-    XOR (``!=``) accumulator.  Exact int64 arithmetic end to end."""
+def _ray_cast_sql(edges: list[tuple[int, int, int, int]], x: str, y: str) -> str:
+    """Codegen even-odd ray cast as SQL text: fold the literal edge array
+    with a boolean XOR (``!=``) accumulator.  Exact int64 arithmetic end to
+    end."""
     edge_lits = ", ".join(
-        f"named_struct('x1', CAST({x1} AS BIGINT), 'y1', CAST({y1} AS BIGINT), "
-        f"'x2', CAST({x2} AS BIGINT), 'y2', CAST({y2} AS BIGINT))"
-        for x1, y1, x2, y2 in _edges(verts)
+        f"named_struct('x1', CAST({int(x1)} AS BIGINT), 'y1', CAST({int(y1)} AS BIGINT), "
+        f"'x2', CAST({int(x2)} AS BIGINT), 'y2', CAST({int(y2)} AS BIGINT))"
+        for x1, y1, x2, y2 in edges
     )
-    return F.expr(
+    return (
         f"aggregate(array({edge_lits}), false, (acc, e) -> (acc != ("
         f"((e.y1 > {y}) != (e.y2 > {y})) AND "
         f"(CASE WHEN e.y2 - e.y1 > 0 "
@@ -57,6 +58,23 @@ def inside_polygon_expr(verts: list[tuple[int, int]], x: str = "x", y: str = "y"
         f"ELSE {x} * (e.y2 - e.y1) > e.x1 * (e.y2 - e.y1) + ({y} - e.y1) * (e.x2 - e.x1) "
         f"END))))"
     )
+
+
+def inside_polygon_expr(verts: list[tuple[int, int]], x: str = "x", y: str = "y") -> F.Column:
+    """Codegen even-odd ray cast of one polygon (see :func:`_ray_cast_sql`)."""
+    return F.expr(_ray_cast_sql(_edges(verts), x, y))
+
+
+def _inside_by_idx(edge_lists: list[list[tuple[int, int, int, int]]]) -> F.Column:
+    """``CASE poly_idx WHEN i THEN <ray cast of shape i> ... ELSE false END``
+    as ONE expression string — one py4j call for the whole batch instead of
+    a ``F.when`` chain around per-shape ``F.expr`` calls (see
+    ``range_query``'s module docstring for the per-call cost)."""
+    arms = " ".join(
+        f"WHEN {i} THEN {_ray_cast_sql(edges, 'x', 'y')}"
+        for i, edges in enumerate(edge_lists)
+    )
+    return F.expr(f"CASE poly_idx {arms} ELSE false END")
 
 
 def pip_join(
@@ -91,11 +109,9 @@ def pip_join(
     )
     # per-polygon covers are disjoint range lists, so each doc matches at
     # most one (ck, lo, hi) row per polygon — no distinct needed afterwards
-    inside = F.when(F.col("poly_idx") == 0, inside_polygon_expr(polygons[0]["vertices"]))
-    for i in range(1, len(polygons)):
-        inside = inside.when(F.col("poly_idx") == i, inside_polygon_expr(polygons[i]["vertices"]))
+    inside = _inside_by_idx([_edges(p["vertices"]) for p in polygons])
     return (
-        cand.filter(inside.otherwise(F.lit(False)))
+        cand.filter(inside)
         .select("poly_id", "doc_id", "x", "y")
     )
 
@@ -125,6 +141,10 @@ pip AS (
 """
 
 
+def _ring_edges(rings: list[list[tuple[int, int]]]) -> list[tuple[int, int, int, int]]:
+    return [e for ring in rings for e in _edges(ring)]
+
+
 def inside_rings_expr(
     rings: list[list[tuple[int, int]]], x: str = "x", y: str = "y"
 ) -> F.Column:
@@ -133,20 +153,7 @@ def inside_rings_expr(
     a point inside the outer ring and inside a hole ring crosses an odd
     number of each, so the combined parity is even = outside.  Same exact
     int64 crossing test as :func:`inside_polygon_expr`."""
-    edge_lits = ", ".join(
-        f"named_struct('x1', CAST({x1} AS BIGINT), 'y1', CAST({y1} AS BIGINT), "
-        f"'x2', CAST({x2} AS BIGINT), 'y2', CAST({y2} AS BIGINT))"
-        for ring in rings
-        for x1, y1, x2, y2 in _edges(ring)
-    )
-    return F.expr(
-        f"aggregate(array({edge_lits}), false, (acc, e) -> (acc != ("
-        f"((e.y1 > {y}) != (e.y2 > {y})) AND "
-        f"(CASE WHEN e.y2 - e.y1 > 0 "
-        f"THEN {x} * (e.y2 - e.y1) < e.x1 * (e.y2 - e.y1) + ({y} - e.y1) * (e.x2 - e.x1) "
-        f"ELSE {x} * (e.y2 - e.y1) > e.x1 * (e.y2 - e.y1) + ({y} - e.y1) * (e.x2 - e.x1) "
-        f"END))))"
-    )
+    return F.expr(_ray_cast_sql(_ring_edges(rings), x, y))
 
 
 def pip_rings_join(
@@ -197,15 +204,9 @@ def pip_rings_join(
     cand = cover_cells_probe(
         doc_geo, per_poly, "poly_id string, poly_idx int", cell_budget
     )
-    inside = F.when(
-        F.col("poly_idx") == 0, inside_rings_expr(ring_polygons[0]["rings"])
-    )
-    for i in range(1, len(ring_polygons)):
-        inside = inside.when(
-            F.col("poly_idx") == i, inside_rings_expr(ring_polygons[i]["rings"])
-        )
+    inside = _inside_by_idx([_ring_edges(p["rings"]) for p in ring_polygons])
     return (
-        cand.filter(inside.otherwise(F.lit(False)))
+        cand.filter(inside)
         .select("poly_id", "doc_id", "x", "y")
     )
 

@@ -29,7 +29,10 @@ Scale design notes:
   if the k-th candidate distance <= the box radius the top-k is proven
   exact, else that query's box grows geometrically and the batch re-probes
   (queries already proven complete keep their radius — the re-probe is
-  still one scan).
+  still one scan).  The rows collected in the last round, the one in which
+  no box grew, ARE the exact answer, so they are returned as a local
+  DataFrame; the function does not hand back a lazy plan that would run
+  the proven probe a second time.
 
 * ``zonal_stats`` — raster/vector zonal aggregation: the PIP join's
   candidates (cell-bucketed broadcast hash join + codegen ray-cast,
@@ -244,6 +247,11 @@ def knn_join(
     scan + one window top-k; the <= len(qspecs)*k collected rows decide per
     query whether its L-inf box provably contains its true top-k (k-th
     distance <= box radius), growing only the unproven boxes.
+
+    The result is the last round's collected rows, the proven answer, as a
+    local relation with the probe's schema — not a lazy re-probe.  Build
+    the plan with ``_ranked(_knn_join_candidates(...), k)`` to inspect the
+    probe itself.
     """
     edge = config.edge
     if initial_radius is None:
@@ -251,7 +259,9 @@ def knn_join(
         initial_radius = max(8, min(edge, 2 * math.isqrt(k * edge * edge // n) + 1))
     radii = {qid: initial_radius for qid, _, _ in qspecs}
     while True:
-        rows = _ranked(_knn_join_candidates(doc_geo, qspecs, radii, config), k).collect()
+        ranked = _ranked(_knn_join_candidates(doc_geo, qspecs, radii, config), k)
+        ranked = ranked.select("qid", "doc_id", "dist2", "rank")
+        rows = ranked.collect()
         by_q: dict[str, list] = {qid: [] for qid, _, _ in qspecs}
         for r in rows:
             by_q[r.qid].append(r)
@@ -271,9 +281,7 @@ def knn_join(
                 radii[qid] = min(edge, math.isqrt(int(kth)) + 1)
                 grew = True
         if not grew:
-            break
-    final = _ranked(_knn_join_candidates(doc_geo, qspecs, radii, config), k)
-    return final.select("qid", "doc_id", "dist2", "rank")
+            return doc_geo.sparkSession.createDataFrame(rows, ranked.schema)
 
 
 def knn_join_oracle(

@@ -201,10 +201,21 @@ def test_distance_join_is_single_shuffled_hash_join(sorted_geo):
 
 
 def test_knn_join_probe_is_broadcast_hash(sorted_geo):
+    """The probe plan is a broadcast hash join with the cover pushed to the
+    scan; ``knn_join`` itself returns the proven round's collected rows, so
+    its frame must not scan the corpus again."""
     from hilbert_curve_spark import workload as W
-    from hilbert_curve_spark.operators.spatial_join import knn_join
+    from hilbert_curve_spark.operators.spatial_join import (
+        _knn_join_candidates,
+        _ranked,
+        knn_join,
+    )
 
-    plan = _plan(knn_join(sorted_geo, W.KNN_JOIN_QUERIES, 5))
+    radii = {qid: 64 for qid, _, _ in W.KNN_JOIN_QUERIES}
+    plan = _plan(
+        _ranked(_knn_join_candidates(sorted_geo, W.KNN_JOIN_QUERIES, radii, DEFAULT), 5)
+    )
+    assert "Scan parquet" not in _plan(knn_join(sorted_geo, W.KNN_JOIN_QUERIES, 5))
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # cover prefilter pushed to the scan
